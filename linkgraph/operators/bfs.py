@@ -37,10 +37,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
 from linkgraph.operators.direction import use_broadcast_frontier
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import Checkpoints
 
 
 def bfs(
@@ -65,12 +62,7 @@ def bfs(
     A store holding more committed levels than ``max_iterations`` is
     clamped: only levels ≤ max_iterations are loaded, so the bound is
     honored across resumes."""
-    if store is not None:
-        commit = store.checkpointer
-        scratch = _default_checkpointer  # intermediates stay in memory
-    else:
-        commit = None
-        scratch = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer, store)
     # edges pre-joined with outdeg(dst): the next frontier's degree sum
     # falls out of the level's own groupBy — no per-level degrees join
     edges = graph.edges_with_dst_out_deg().select("src", "dst", "dst_out_deg")
@@ -93,9 +85,9 @@ def bfs(
             "out_deg", F.coalesce("out_deg", F.lit(0))
         )
 
-    resumed = store.latest_iteration() if store is not None else None
+    resumed = ckpt.resume(max_iterations)  # honor the bound across resumes
     if resumed is not None:
-        start = min(resumed, max_iterations)  # honor the bound across resumes
+        start = resumed
         visited = store.load_upto(start)
         if "out_deg" not in visited.columns:  # pre-round-3 store layout
             # normalize the WHOLE loaded set, not just the frontier: the
@@ -150,7 +142,7 @@ def bfs(
             [(int(root), 0, int(root), root_deg)],
             "id long, dist long, parent long, out_deg long",
         )
-        visited = commit(seed, 0) if store is not None else scratch(seed, 0)
+        visited = ckpt.cut(seed, 0)
         frontier = visited
         frontier_size, frontier_degree = 1, root_deg
         visited_rows = 1
@@ -191,17 +183,11 @@ def bfs(
             .join(seen, "id", "left_anti")
             .select("id", "dist", "parent", "out_deg")
         )
-        if store is not None:
-            # delta commit: only the newly discovered rows hit the store;
-            # the stats aggregate then re-reads the tiny committed delta
-            nxt = commit(nxt, level)
-        elif checkpointer is None:
-            # LAZY plan truncation: no job here — delta_stats below is the
-            # single action that materializes the level and returns the
-            # switch statistic
-            nxt = nxt.localCheckpoint(eager=False)
-        else:
-            nxt = scratch(nxt, level)
+        # durable runs commit only the newly discovered rows; on the
+        # default path the cut is lazy — delta_stats below is the single
+        # action that materializes the level and returns the switch
+        # statistic
+        nxt = ckpt.cut(nxt, level, eager=False)
         frontier_size, frontier_degree = delta_stats(nxt)
         visited_rows += frontier_size
         frontier = nxt
@@ -213,7 +199,7 @@ def bfs(
         # growing union plan only every 8 levels.
         visited = visited.unionByName(nxt)
         if level % 8 == 0:
-            visited = scratch(visited, level)
+            visited = ckpt.truncate(visited, level)
 
     out = visited if return_parents else visited.select("id", "dist")
     return out.select(*[c for c in out.columns if c != "out_deg"])

@@ -52,10 +52,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.docs import _md5_60
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import Checkpoints
 
 
 def graph_coloring(
@@ -69,8 +66,7 @@ def graph_coloring(
     rounds (Johansson) with md5-priority conflict resolution. Per vertex
     color(v) ≤ deg(v) (isolated vertices get 0); proper — asserted in
     tests/test_coloring.py."""
-    lazy = checkpointer is None
-    checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer)
     canon = graph.canonical_undirected_edges()
     sym = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
@@ -78,7 +74,7 @@ def graph_coloring(
     # simple undirected degree — the per-vertex palette size − 1; reused
     # every round, materialized once
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg"))
-    deg = deg.localCheckpoint(eager=True) if lazy else checkpoint(deg, -2)
+    deg = ckpt.cut(deg, -2)
 
     pri = _md5_60(f"concat('color:{int(seed)}:', CAST(id AS STRING))")
     alive = (
@@ -87,8 +83,8 @@ def graph_coloring(
         .join(deg, "id", "left")
         .select("id", "p", F.coalesce("deg", F.lit(0)).alias("deg"))
     )
-    alive = alive.localCheckpoint(eager=False) if lazy else checkpoint(alive, 0)
-    live_e = sym.localCheckpoint(eager=False) if lazy else checkpoint(sym, -1)
+    alive = ckpt.cut(alive, 0, eager=False)
+    live_e = ckpt.cut(sym, -1, eager=False)
     n_alive = alive.count()
     colored: DataFrame | None = None
 
@@ -119,7 +115,7 @@ def graph_coloring(
             )
             # nc feeds BOTH the palette-size count and the skip formula —
             # materialize once (fan-out recompute pitfall)
-            nc = nc.localCheckpoint(eager=True) if lazy else checkpoint(nc, 4000 + it)
+            nc = ckpt.cut(nc, 4000 + it)
             used = nc.groupBy("id").agg(F.count("*").alias("m"))
             tentj = (
                 alive.join(used, "id", "left")
@@ -159,7 +155,7 @@ def graph_coloring(
             )
         # tent fans out into the conflict self-join (both sides) AND the
         # winner/loser splits — materialize once
-        tent = tent.localCheckpoint(eager=True) if lazy else checkpoint(tent, it)
+        tent = ckpt.cut(tent, it)
         # 3. losers: alive-alive edges with equal tentative colors; the
         #    (p, id)-greater endpoint retries next round
         ta = tent.select(
@@ -181,23 +177,17 @@ def graph_coloring(
             .select(F.col("src").alias("id"))
             .distinct()
         )
-        losers = (
-            losers.localCheckpoint(eager=True) if lazy else checkpoint(losers, 1000 + it)
-        )
+        losers = ckpt.cut(losers, 1000 + it)
         newly = tent.join(losers, "id", "left_anti").select("id", "color")
         colored = newly if colored is None else colored.unionByName(newly)
         # shrink the frontier and its live edge set
         nxt = alive.join(losers, "id", "left_semi")
-        nxt = nxt.localCheckpoint(eager=False) if lazy else checkpoint(nxt, 2000 + it)
+        nxt = ckpt.cut(nxt, 2000 + it, eager=False)
         lid = losers.select(F.col("id"))
         live_e = live_e.join(lid, live_e["src"] == lid["id"], "left_semi").join(
             lid, live_e["dst"] == lid["id"], "left_semi"
         )
-        live_e = (
-            live_e.localCheckpoint(eager=False)
-            if lazy
-            else checkpoint(live_e, 3000 + it)
-        )
+        live_e = ckpt.cut(live_e, 3000 + it, eager=False)
         n_alive = nxt.count()
         alive = nxt
     else:

@@ -36,10 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import Checkpoints
 
 
 def densest_subgraph(
@@ -57,13 +54,12 @@ def densest_subgraph(
     maximizing the IEEE-double density. Empty graph → empty result."""
     if eps_num < 0 or eps_den <= 0:
         raise ValueError(f"epsilon must be ≥ 0, got {eps_num}/{eps_den}")
-    lazy = checkpointer is None
-    checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer)
     canon = graph.canonical_undirected_edges()
     sym = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    alive = sym.localCheckpoint(eager=False) if lazy else checkpoint(sym, 0)
+    alive = ckpt.cut(sym, 0, eager=False)
 
     best_df: DataFrame | None = None
     best_density = -1.0
@@ -89,7 +85,7 @@ def densest_subgraph(
         nxt = alive.join(keep, alive["src"] == keep["id"], "left_semi").join(
             keep, F.col("dst") == keep["id"], "left_semi"
         )
-        alive = nxt.localCheckpoint(eager=False) if lazy else checkpoint(nxt, it)
+        alive = ckpt.cut(nxt, it, eager=False)
     else:
         # the emptiness test lives at loop TOP, so a peel that empties
         # exactly on round max_iterations exhausts the for — re-check

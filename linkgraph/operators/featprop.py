@@ -38,10 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import Checkpoints
 
 
 def feature_propagation(
@@ -59,7 +56,7 @@ def feature_propagation(
     from ``features`` are absent from the output (attach-policy is the
     caller's). ``dims`` truncates to the first D dimensions BEFORE the
     explode, so column pruning reaches the feature scan."""
-    checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer)
 
     vec = F.col(vec_col)
     if dims is not None:
@@ -68,7 +65,7 @@ def feature_propagation(
         F.col(id_col).cast("long").alias("id"),
         F.posexplode(vec).alias("dim", "x"),
     ).select("id", "dim", F.col("x").cast("double").alias("x"))
-    state = checkpoint(state, 0)
+    state = ckpt.cut(state, 0)
 
     sym = graph.symmetrized().edges
     for h in range(1, hops + 1):
@@ -80,5 +77,5 @@ def feature_propagation(
         state = state.join(pushed, ["id", "dim"], "left").select(
             "id", "dim", F.coalesce("nx", F.col("x")).alias("x")
         )
-        state = checkpoint(state, h)
+        state = ckpt.cut(state, h)
     return state

@@ -24,10 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import Checkpoints
 
 
 def k_core(
@@ -51,13 +48,12 @@ def k_core(
     # lazily-marked checkpoint AND tests convergence — one Spark job per
     # peel round, not a materialize job plus a count job. An explicit
     # checkpointer (durable store) keeps its own commit job.
-    lazy = checkpointer is None
-    checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer)
     canon = graph.canonical_undirected_edges()  # (a, b), a < b, deduped
     sym = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    alive = sym.localCheckpoint(eager=False) if lazy else checkpoint(sym, 0)
+    alive = ckpt.cut(sym, 0, eager=False)
     n_alive = alive.count()
 
     for it in range(1, max_iterations + 1):
@@ -69,7 +65,7 @@ def k_core(
             alive.join(keep, alive["src"] == keep["id"], "left_semi")
             .join(keep, F.col("dst") == keep["id"], "left_semi")
         )
-        nxt = nxt.localCheckpoint(eager=False) if lazy else checkpoint(nxt, it)
+        nxt = ckpt.cut(nxt, it, eager=False)
         n_next = nxt.count()
         if n_next == n_alive:
             break
@@ -122,8 +118,7 @@ def coreness(
     # lazy default-path checkpoints: the changed-count below is the one
     # action per H-round (materializes the checkpoint AND returns the
     # convergence statistic) — see k_core
-    lazy = checkpointer is None
-    checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer)
     canon = graph.canonical_undirected_edges()
     # partitioned by the JOIN key once and PERSISTED (not checkpointed:
     # a LogicalRDD loses its outputPartitioning, an InMemoryRelation
@@ -140,7 +135,7 @@ def coreness(
         sym.groupBy(F.col("src").alias("id"))
         .agg(F.count("*").alias("c"))
     )
-    c = c.localCheckpoint(eager=False) if lazy else checkpoint(c, 0)
+    c = ckpt.cut(c, 0, eager=False)
 
     w = (
         Window.partitionBy("src")
@@ -162,7 +157,7 @@ def coreness(
         merged = c.join(h, "id").select(
             "id", F.col("c").alias("old"), F.col("h").alias("c")
         )
-        merged = merged.localCheckpoint(eager=False) if lazy else checkpoint(merged, it)
+        merged = ckpt.cut(merged, it, eager=False)
         changed = merged.filter(F.col("c") != F.col("old")).count()
         c = merged.select("id", "c")
         if changed == 0:
@@ -209,13 +204,12 @@ def onion_decomposition(
     of onion layers ≤ peeling depth ≤ O(V) worst case (bare path),
     guarded loudly by ``max_iterations``.
     """
-    lazy = checkpointer is None
-    checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer)
     canon = graph.canonical_undirected_edges()
     sym = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    alive_e = sym.localCheckpoint(eager=False) if lazy else checkpoint(sym, 0)
+    alive_e = ckpt.cut(sym, 0, eager=False)
     alive_v = graph.vertices()
     core = 0
     layers: list[DataFrame] = []
@@ -230,7 +224,7 @@ def onion_decomposition(
             )
             .select("id", F.coalesce("d", F.lit(0)).cast("long").alias("d"))
         )
-        deg = deg.localCheckpoint(eager=False) if lazy else checkpoint(deg, layer)
+        deg = ckpt.cut(deg, layer, eager=False)
         stats = deg.agg(
             F.min("d").alias("kmin"), F.count("*").alias("n")
         ).collect()[0]
@@ -248,7 +242,7 @@ def onion_decomposition(
         nxt = alive_e.join(
             alive_v, alive_e["src"] == alive_v["id"], "left_semi"
         ).join(alive_v, F.col("dst") == F.col("id"), "left_semi")
-        alive_e = nxt.localCheckpoint(eager=False) if lazy else checkpoint(nxt, layer)
+        alive_e = ckpt.cut(nxt, layer, eager=False)
     else:
         raise RuntimeError(
             f"onion_decomposition: peel did not converge in "

@@ -18,10 +18,9 @@ Semantics (pinned, mirrored by the SQL oracle and the NumPy oracle):
 
 Physical notes: one shuffle to join labels onto edges (state → edges, the
 small side moves), then ONE wide exchange of the (dst, label) vote rows
-keyed on dst (default ``exchange='single'`` — HashPartitioning on dst
-satisfies both downstream aggregates, so the (dst, label) count AND the
-per-vertex argmax run exchange-free; see label_propagation's docstring
-for the measured A/B and the ``'pairs'`` escape hatch). The argmax is
+keyed on dst — HashPartitioning on dst satisfies both downstream
+aggregates, so the (dst, label) count AND the per-vertex argmax run
+exchange-free (measured A/B in label_propagation's docstring). The argmax is
 ``max(struct(cnt, -label))`` — an aggregate, NOT a window, so it needs no
 sort.
 """
@@ -34,10 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import Checkpoints
 
 
 def label_propagation(
@@ -45,34 +41,19 @@ def label_propagation(
     iterations: int = 10,
     checkpointer: Callable[[DataFrame, int], DataFrame] | None = None,
     store=None,
-    exchange: str = "single",
     weighted: bool = False,
 ) -> DataFrame:
     """Returns DataFrame(id: long, label: long). ``store`` commits each
     round's labels; a relaunch continues from the highest committed round
     (fixed-round algorithm — the iteration index is the whole loop state).
 
-    ``exchange`` picks the round's wide-shuffle strategy (identical
-    output, measured A/B at 24M symmetrized edges / 2^20 vertices,
-    local[32]):
-
-    - ``"single"`` (default): repartition the joined (dst, label) vote
-      rows by ``dst`` once; HashPartitioning(dst) satisfies the clustered
-      distribution of BOTH the (dst, label) count and the per-dst argmax,
-      so the two aggregates run exchange-free — one wide shuffle per
-      round instead of two. Measured 31.0 s → 18.9 s (1.6×) on the Zipf
-      hub graph (1%-of-edges hub), labels bit-identical.
-    - ``"pairs"``: the classic two-aggregate plan — partial/final count
-      keyed on (dst, label) (its exchange spreads a hub's votes across
-      partitions, label acting as a natural salt), then a second exchange
-      on dst carrying only DISTINCT (dst, label) partials. Keep for
-      extreme-hub regimes: the ``single`` plan routes deg(hub) raw vote
-      rows into one partition, while ``pairs``' second exchange carries
-      only distinct-labels(hub) ≤ deg(hub) rows — the safer shape once a
-      single vertex's in-degree rivals a whole partition's capacity AND
-      its neighborhood has already collapsed to few labels (late rounds);
-      in early rounds distinct ≈ deg and ``pairs`` just pays the volume
-      twice, which is why ``single`` wins the measured 5-round run.
+    Each round repartitions the joined (dst, label) vote rows by ``dst``
+    once; HashPartitioning(dst) satisfies the clustered distribution of
+    BOTH the (dst, label) count and the per-dst argmax, so the two
+    aggregates run exchange-free — one wide shuffle per round instead of
+    the classic two-aggregate plan's two. Measured A/B at 24M symmetrized
+    edges / 2^20 vertices, local[32]: 31.0 s → 18.9 s (1.6×) on the Zipf
+    hub graph (1%-of-edges hub), labels bit-identical.
 
     ``weighted=True`` makes every vote carry its edge weight (argmax of
     summed neighbor-edge weight, ties still to the smaller label) — the
@@ -81,38 +62,26 @@ def label_propagation(
     integer-valued weights, so determinism and the DuckDB twin's parity
     are preserved; the physical plan is unchanged (the weight column
     rides the same vote rows)."""
-    if store is not None:
-        checkpoint = store.checkpointer
-    else:
-        checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer, store)
     if weighted and "weight" not in graph.edges.columns:
         raise ValueError("label_propagation: weighted=True needs a weight column")
     vote_cols = ["src", "dst"] + (["weight"] if weighted else [])
     sym = graph.symmetrized().edges.select(*vote_cols)
 
     start = 0
-    resumed = store.latest_iteration() if store is not None else None
+    resumed = ckpt.resume(iterations)
     if resumed is not None:
-        # clamp to the requested round count (a store with more committed
-        # rounds must not answer for a smaller round count)
-        start = min(resumed, iterations)
+        start = resumed
         labels = store.load(start).select("id", "label")
     else:
         labels = graph.vertices().select("id", F.col("id").alias("label"))
-        labels = checkpoint(labels, 0)
-
-    if exchange not in ("single", "pairs"):
-        raise ValueError(
-            f"label_propagation: exchange must be 'single' or 'pairs', got {exchange!r}"
-        )
+        labels = ckpt.cut(labels, 0)
 
     vote = F.sum("weight") if weighted else F.count("*")
     for it in range(start + 1, iterations + 1):
         joined = sym.join(labels, sym["src"] == labels["id"]).select(
             "dst", "label", *(["weight"] if weighted else [])
-        )
-        if exchange == "single":
-            joined = joined.repartition(graph.num_partitions, "dst")
+        ).repartition(graph.num_partitions, "dst")
         votes = joined.groupBy("dst", "label").agg(vote.alias("cnt"))
         # argmax by (cnt, -label): max count, ties broken by smaller label
         winner = (
@@ -124,6 +93,6 @@ def label_propagation(
             labels.join(winner, labels["id"] == winner["dst"], "left")
             .select("id", F.coalesce("new_label", F.col("label")).alias("label"))
         )
-        labels = checkpoint(labels, it)
+        labels = ckpt.cut(labels, it)
 
     return labels

@@ -60,10 +60,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import Checkpoints
 
 
 def louvain_move(
@@ -77,10 +74,7 @@ def louvain_move(
     round's labels; a relaunch continues from the highest committed round
     (fixed-round algorithm — the iteration index is the whole loop
     state)."""
-    if store is not None:
-        checkpoint = store.checkpointer
-    else:
-        checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer, store)
 
     canon = graph.canonical_undirected_edges()
     sym = canon.select(
@@ -90,9 +84,9 @@ def louvain_move(
     deg = sym.groupBy("src").agg(F.count("*").alias("d"))
 
     start = 0
-    resumed = store.latest_iteration() if store is not None else None
+    resumed = ckpt.resume(rounds)
     if resumed is not None:
-        start = min(resumed, rounds)
+        start = resumed
         state = store.load(start).select("id", "comm", "d")
     else:
         state = (
@@ -104,7 +98,7 @@ def louvain_move(
                 F.coalesce("d", F.lit(0)).cast("long").alias("d"),
             )
         )
-        state = checkpoint(state, 0)
+        state = ckpt.cut(state, 0)
 
     for r in range(start + 1, rounds + 1):
         tot = state.groupBy("comm").agg(F.sum("d").alias("tot"))
@@ -166,6 +160,6 @@ def louvain_move(
             .select(F.col("src").alias("id"), (-F.col("w.nn")).alias("comm"))
         )
         state = state.select("id", "d").join(winner, "id").select("id", "comm", "d")
-        state = checkpoint(state, r)
+        state = ckpt.cut(state, r)
 
     return state.select("id", "comm")

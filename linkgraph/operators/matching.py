@@ -30,10 +30,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.docs import _md5_60
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import Checkpoints
 
 
 def maximal_matching(
@@ -102,9 +99,8 @@ def _greedy_rounds(
     """Shared deterministic-greedy round loop over an (a, b, p) alive set:
     match every edge that is the (p, a, b)-minimum at both endpoints,
     retire matched stars, repeat to an empty alive set."""
-    lazy = checkpointer is None
-    checkpoint = checkpointer or _default_checkpointer
-    alive = alive.localCheckpoint(eager=False) if lazy else checkpoint(alive, 0)
+    ckpt = Checkpoints(checkpointer)
+    alive = ckpt.cut(alive, 0, eager=False)
     n_alive = alive.count()
     matched: DataFrame | None = None
 
@@ -124,7 +120,7 @@ def _greedy_rounds(
             .filter((me == F.col("ma")) & (me == F.col("mb")))
             .select("a", "b")
         )
-        win = win.localCheckpoint(eager=True) if lazy else checkpoint(win, it)
+        win = ckpt.cut(win, it)
         matched = win if matched is None else matched.unionByName(win)
         dead = win.select(F.col("a").alias("v")).unionByName(
             win.select(F.col("b").alias("v"))
@@ -133,7 +129,7 @@ def _greedy_rounds(
             alive.join(dead, alive["a"] == dead["v"], "left_anti")
             .join(dead, alive["b"] == dead["v"], "left_anti")
         )
-        nxt = nxt.localCheckpoint(eager=False) if lazy else checkpoint(nxt, 1000 + it)
+        nxt = ckpt.cut(nxt, 1000 + it, eager=False)
         n_alive = nxt.count()  # materializes the round's alive set
         alive = nxt
     else:

@@ -28,10 +28,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.docs import _md5_60
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import Checkpoints
 
 
 def maximal_independent_set(
@@ -45,15 +42,14 @@ def maximal_independent_set(
     md5-priority order (isolated vertices are always in). Independent
     (no two members adjacent) and maximal (every non-member has a member
     neighbor) — both properties are asserted in tests/test_mis.py."""
-    lazy = checkpointer is None
-    checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer)
     canon = graph.canonical_undirected_edges()
     sym = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
     pri = _md5_60(f"concat('mis:{int(seed)}:', CAST(id AS STRING))")
     alive = graph.vertices().select("id", pri.alias("p"))
-    alive = alive.localCheckpoint(eager=False) if lazy else checkpoint(alive, 0)
+    alive = ckpt.cut(alive, 0, eager=False)
     n_alive = alive.count()
     mis: DataFrame | None = None
 
@@ -77,7 +73,7 @@ def maximal_independent_set(
         # (the fan-out recompute pitfall: Catalyst re-executes unshared
         # subplans per consumer), leaving the alive-count job pure
         # anti-joins
-        win = win.localCheckpoint(eager=True) if lazy else checkpoint(win, it)
+        win = ckpt.cut(win, it)
         mis = win if mis is None else mis.unionByName(win)
         # retire winners and their whole neighborhoods
         dead_nbrs = sym.join(win, sym["dst"] == win["id"], "left_semi").select("src")
@@ -85,7 +81,7 @@ def maximal_independent_set(
             alive.join(win, "id", "left_anti")
             .join(dead_nbrs, alive["id"] == dead_nbrs["src"], "left_anti")
         )
-        nxt = nxt.localCheckpoint(eager=False) if lazy else checkpoint(nxt, 1000 + it)
+        nxt = ckpt.cut(nxt, 1000 + it, eager=False)
         n_alive = nxt.count()  # materializes the round's alive set
         alive = nxt
     else:

@@ -46,10 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import Checkpoints
 
 
 def minimum_spanning_forest(
@@ -61,11 +58,11 @@ def minimum_spanning_forest(
     """Returns DataFrame(a: long, b: long, weight: double) — the unique
     minimum spanning forest under the (weight, a, b) total order; V − C
     rows (C = number of connected components). ``store`` commits each
-    round's component map; a relaunch rebuilds the forest from the
-    resumed labels' merge history is NOT stored, so resume restarts the
-    forest — Borůvka's ≤log V rounds make re-running cheap; the store
-    hook exists for lineage-truncation parity with the other kernels."""
-    checkpoint = checkpointer or (store.checkpointer if store is not None else _default_checkpointer)
+    round's component map. The forest itself (the merge history) is NOT
+    stored, so a relaunch restarts from round 0 — Borůvka's ≤log V rounds
+    make re-running cheap; the store hook exists for lineage-truncation
+    parity with the other kernels."""
+    ckpt = Checkpoints(checkpointer, store)
 
     e = graph.edges.filter(F.col("src") != F.col("dst"))
     canon = (
@@ -81,7 +78,7 @@ def minimum_spanning_forest(
     )
 
     comp = graph.vertices().select("id", F.col("id").alias("comp"))
-    comp = checkpoint(comp, 0)
+    comp = ckpt.cut(comp, 0)
     forest = None
 
     def _inter_edges(comp: DataFrame) -> DataFrame:
@@ -130,7 +127,7 @@ def minimum_spanning_forest(
         comp = comp.join(merged, "comp", "left").select(
             "id", F.coalesce("new_comp", F.col("comp")).alias("comp")
         )
-        comp = checkpoint(comp, r)
+        comp = ckpt.cut(comp, r)
     # a run whose LAST allowed round finishes the contraction is converged
     # even though the loop exhausted — check the final state, don't raise
     # on loop exit alone (the mis/matching for-else pitfall)

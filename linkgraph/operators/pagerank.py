@@ -27,9 +27,9 @@ Physical plan per iteration (what .explain should show):
   with AQE skew handling as belt-and-braces.
 
 Lineage control: iterative plans grow unboundedly unless truncated — each
-iteration's state is cut via ``checkpointer`` (default: eager
-localCheckpoint; the production runner writes/reads the checkpoint store
-instead, which also provides resume).
+iteration's state is cut by ``runner.Checkpoints`` (a local checkpoint by
+default; a durable ``store`` writes/reads the checkpoint store instead,
+which also provides resume).
 """
 
 from __future__ import annotations
@@ -40,13 +40,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
+from linkgraph.runner import Checkpoints
 
 DAMPING = 0.85
 INIT_RANK = 0.15  # pagerank_simple.c:95 — reference inits prev to 0.15, not 1/N
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
 
 
 def pagerank(
@@ -60,7 +57,6 @@ def pagerank(
     store=None,
     salt: int | None = None,
     unroll: int = 4,
-    unroll_cap: int | None = None,
     info: dict | None = None,
     init_state: DataFrame | None = None,
 ) -> DataFrame:
@@ -99,39 +95,23 @@ def pagerank(
     ``tol/unroll`` for a provable per-step bound); in the worst case the
     run does at most ``unroll - 1`` extra iterations of work.
 
-    ``unroll_cap`` (convergence mode): geometric block-depth growth —
-    double the depth while the blocked delta is ≥ 100·tol, up to the
-    cap; back to ``unroll`` near the tolerance. DEFAULT None = cap at
-    ``unroll``, i.e. growth OFF: measured r04 at sf0.1 (warm,
-    back-to-back), depth-4 blocks run 13.1 s to 1e-6 where depth-8 runs
-    21.7 s and depth-16 did not finish in 9 minutes — Catalyst analysis
-    cost grows superlinearly with chained join-agg depth, and at this
-    engine's per-block latency (~0.25 s) the saved job launches never
-    repay it. The knob exists for deployments where per-job latency is
-    genuinely dominant (e.g. a busy shared cluster scheduler).
-
     ``info``: optional dict the run fills with ``iterations`` (rounds
     actually executed) and ``delta`` (last blocked L∞ delta, convergence
     mode) — observability without a custom checkpointer, which would
-    opt the run out of the lazy/adaptive fast path.
+    opt the run out of the lazy fast path.
     """
-    if store is not None:
-        checkpoint = store.checkpointer
-    else:
-        checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer, store)
     n = graph.num_vertices
     if n == 0:
         raise ValueError("pagerank: graph has no vertices")
     teleport = (1.0 - damping) / n  # adding_constant, pagerank_simple.c:88
     norm_edges = graph.out_normalized_edges()
 
+    total_rounds = iterations if tol is None else max_iterations
     start = 0
-    resumed = store.latest_iteration() if store is not None else None
+    resumed = ckpt.resume(total_rounds)
     if resumed is not None:
-        # clamp: a store holding MORE committed rounds than requested must
-        # not return the over-iterated state as the smaller-round answer
-        target = iterations if tol is None else max_iterations
-        start = min(resumed, target)
+        start = resumed
         ranks = store.load(start).select("id", "rank")
     elif init_state is not None:
         ranks = (
@@ -141,10 +121,10 @@ def pagerank(
                 "id", F.coalesce("warm", F.lit(float(init_rank))).alias("rank")
             )
         )
-        ranks = checkpoint(ranks, 0)
+        ranks = ckpt.cut(ranks, 0)
     else:
         ranks = graph.vertices().select("id", F.lit(float(init_rank)).alias("rank"))
-        ranks = checkpoint(ranks, 0)
+        ranks = ckpt.cut(ranks, 0)
 
     def one_round(state: DataFrame) -> DataFrame:
         """One recurrence application: (id, rank[, old_rank]) → same shape.
@@ -174,27 +154,20 @@ def pagerank(
         )
 
     # clamp: Catalyst analysis cost grows superlinearly with chained
-    # join-agg depth (measured r01 AND re-measured r04: unroll=8 is
-    # 1.7-2x SLOWER than 4 at sf0.1, 16 pathological) — 4 is the sweet
-    # spot, 8 the safe ceiling; adaptive growth is opt-in via unroll_cap
+    # join-agg depth (measured r04 at sf0.1 to 1e-6: depth-4 blocks 13.1 s,
+    # depth-8 21.7 s, depth-16 unfinished after 9 minutes) — 4 is the
+    # sweet spot, 8 the safe ceiling
     step = 1 if store is not None else min(max(1, unroll), 8)
-    cap = step if unroll_cap is None else max(step, min(unroll_cap, 16))
-    total_rounds = iterations if tol is None else max_iterations
     it = start
-    # default path only: durable stores and custom checkpointers keep
-    # their own (eager) materialization semantics
-    lazy_ok = store is None and checkpointer is None
-    dyn = step  # adaptive block depth, convergence mode only
     while it < total_rounds:
+        block = min(step, total_rounds - it)
         if tol is None:
-            block = min(step, total_rounds - it)
             cur = ranks
             for _ in range(block):
                 cur = one_round(cur)
             it += block
-            ranks = checkpoint(cur.select("id", "rank"), it)
+            ranks = ckpt.cut(cur.select("id", "rank"), it)
         else:
-            block = min(dyn, total_rounds - it)
             # carry the block-start rank through the checkpoint so the L∞
             # delta is an aggregate over the just-materialized state — no
             # extra join against old state (a second full shuffle at 10^9
@@ -203,14 +176,10 @@ def pagerank(
             for _ in range(block):
                 cur = one_round(cur)
             it += block
-            staged = cur.select("id", "old_rank", "rank")
-            if lazy_ok:
-                # LAZY: the delta aggregate below is the block's single
-                # job — it materializes the checkpoint AND returns the
-                # convergence statistic (the r03 BFS shape)
-                staged = staged.localCheckpoint(eager=False)
-            else:
-                staged = checkpoint(staged, it)
+            # lazy on the default path: the delta aggregate below is the
+            # block's single job — it materializes the checkpoint AND
+            # returns the convergence statistic (the r03 BFS shape)
+            staged = ckpt.cut(cur.select("id", "old_rank", "rank"), it, eager=False)
             delta = staged.agg(
                 F.max(F.abs(F.col("rank") - F.col("old_rank"))).alias("d")
             ).collect()[0]["d"]
@@ -219,16 +188,6 @@ def pagerank(
                 info["delta"] = delta
             if delta is not None and delta < tol:
                 break
-            # adaptive unroll (VERDICT r03 'Next round' #8): far from the
-            # tolerance, double the block depth (fewer job launches +
-            # delta collects per iteration — geometric, capped); once the
-            # blocked delta is within 100× tol, fall back to the base
-            # depth so the run overshoots by at most `unroll`-ish extra
-            # iterations, preserving the documented convergence bound
-            # adaptive unroll (opt-in, see unroll_cap in the docstring):
-            # deepen while far from tol, reset near it
-            if delta is not None and lazy_ok:
-                dyn = min(dyn * 2, cap) if delta >= 100.0 * tol else step
 
     if info is not None:
         info["iterations"] = it
@@ -260,7 +219,7 @@ def personalized_pagerank(
     """
     if not sources:
         raise ValueError("personalized_pagerank: sources must be non-empty")
-    checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer)
     srcs = sorted({int(s) for s in sources})
     b = float(init_mass) / len(srcs)
     norm_edges = graph.out_normalized_edges()
@@ -268,7 +227,7 @@ def personalized_pagerank(
         "id",
         F.when(F.col("id").isin(srcs), F.lit(b)).otherwise(F.lit(0.0)).alias("base"),
     )
-    state = checkpoint(state.withColumn("rank", F.col("base")), 0)
+    state = ckpt.cut(state.withColumn("rank", F.col("base")), 0)
 
     def one_round(s: DataFrame) -> DataFrame:
         scattered = norm_edges.join(s, norm_edges["src"] == s["id"]).select(
@@ -292,7 +251,7 @@ def personalized_pagerank(
         for _ in range(block):
             cur = one_round(cur)
         it += block
-        state = checkpoint(cur.select("id", "base", "rank"), it)
+        state = ckpt.cut(cur.select("id", "base", "rank"), it)
     return state.select("id", "rank")
 
 
@@ -323,7 +282,7 @@ def weighted_pagerank(
     edge table is built ONCE (two shuffles: the W(u) aggregate + the
     co-partitioned join) and persisted; per round one edges⋈state join
     + map-side-combined mass aggregate + row-preserving teleport join."""
-    checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer)
     n = graph.num_vertices
     if n == 0:
         raise ValueError("weighted_pagerank: graph has no vertices")
@@ -337,7 +296,7 @@ def weighted_pagerank(
         .localCheckpoint(eager=True)
     )
     ranks = graph.vertices().select("id", F.lit(float(init_rank)).alias("rank"))
-    ranks = checkpoint(ranks, 0)
+    ranks = ckpt.cut(ranks, 0)
     for it in range(1, iterations + 1):
         mass = (
             norm.join(ranks, norm["src"] == ranks["id"])
@@ -351,7 +310,7 @@ def weighted_pagerank(
                 + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
             ).alias("rank"),
         )
-        ranks = checkpoint(ranks, it)
+        ranks = ckpt.cut(ranks, it)
     return ranks
 
 

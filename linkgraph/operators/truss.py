@@ -31,10 +31,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
 from linkgraph.operators.triangles import _triangle_stream_from_canon
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import Checkpoints
 
 
 def _edge_support(canon: DataFrame, degree_oriented: bool) -> DataFrame:
@@ -95,12 +92,11 @@ def k_truss(
     """
     if k < 2:
         raise ValueError(f"k must be ≥ 2, got {k}")
-    lazy = checkpointer is None
-    checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer)
     canon = graph.canonical_undirected_edges()
 
     if not incremental:
-        alive = canon.localCheckpoint(eager=False) if lazy else checkpoint(canon, 0)
+        alive = ckpt.cut(canon, 0, eager=False)
         n_alive = alive.count()
         for it in range(1, max_iterations + 1):
             if n_alive == 0:
@@ -111,7 +107,7 @@ def k_truss(
                 .filter(F.coalesce(F.col("sup"), F.lit(0)) >= k - 2)
                 .select("a", "b")
             )
-            nxt = nxt.localCheckpoint(eager=False) if lazy else checkpoint(nxt, it)
+            nxt = ckpt.cut(nxt, it, eager=False)
             n_next = nxt.count()
             if n_next == n_alive:
                 break
@@ -133,17 +129,13 @@ def k_truss(
     sup = canon.join(supp0, ["a", "b"], "left").select(
         "a", "b", F.coalesce(F.col("sup"), F.lit(0)).cast("long").alias("sup")
     )
-    sup = sup.localCheckpoint(eager=False) if lazy else checkpoint(sup, 0)
+    sup = ckpt.cut(sup, 0, eager=False)
 
     for it in range(1, max_iterations + 1):
         peeled = sup.filter(F.col("sup") < k - 2).select("a", "b")
         # lazy checkpoint + count: the ONE action of the round — it
         # materializes sup (and peeled) for the three consumers below
-        peeled = (
-            peeled.localCheckpoint(eager=False)
-            if lazy
-            else checkpoint(peeled, it)
-        )
+        peeled = ckpt.cut(peeled, it, eager=False)
         n_peeled = peeled.count()
         if n_peeled == 0:
             break
@@ -187,7 +179,7 @@ def k_truss(
                 (F.col("sup") - F.coalesce(F.col("d"), F.lit(0))).alias("sup"),
             )
         )
-        sup = nxt.localCheckpoint(eager=False) if lazy else checkpoint(sup, 1000 + it)
+        sup = ckpt.cut(nxt, 1000 + it, eager=False)
     else:
         raise RuntimeError(
             f"k_truss(k={k}): peel did not converge in {max_iterations} "
@@ -236,8 +228,7 @@ def trussness(
     from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel
 
-    lazy = checkpointer is None
-    checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer)
     canon = graph.canonical_undirected_edges()
     tri = (
         _triangle_stream_from_canon(canon, degree_oriented)
@@ -258,7 +249,7 @@ def trussness(
         .groupBy("a", "b")
         .agg(F.count("*").alias("rho"))
     )
-    rho = rho.localCheckpoint(eager=False) if lazy else checkpoint(rho, 0)
+    rho = ckpt.cut(rho, 0, eager=False)
 
     w = (
         Window.partitionBy("a", "b")
@@ -310,7 +301,7 @@ def trussness(
             F.col("rho").alias("old"),
             F.least(F.col("rho"), F.col("h")).alias("rho"),
         )
-        merged = merged.localCheckpoint(eager=False) if lazy else checkpoint(merged, it)
+        merged = ckpt.cut(merged, it, eager=False)
         changed = merged.filter(F.col("rho") != F.col("old")).count()
         rho = merged.select("a", "b", "rho")
         if changed == 0:

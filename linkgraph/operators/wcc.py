@@ -29,10 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
-
-
-def _default_checkpointer(df: DataFrame, iteration: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from linkgraph.runner import Checkpoints
 
 
 def _edge_fingerprint(df: DataFrame) -> tuple:
@@ -70,14 +67,11 @@ def wcc(
     (id, old_comp, comp), so the worklist frontier (rows where comp
     shrank) is reconstructible from the stored state alone.
     """
-    if store is not None:
-        checkpoint = store.checkpointer
-    else:
-        checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer, store)
     sym = graph.symmetrized().edges.select("src", "dst")
 
     start = 0
-    resumed = store.latest_iteration() if store is not None else None
+    resumed = ckpt.resume(max_iterations)
     if resumed is not None:
         loaded = store.load(resumed)
         comp = loaded.select("id", "comp")
@@ -90,7 +84,7 @@ def wcc(
         start = resumed
     else:
         comp = graph.vertices().select("id", F.col("id").alias("comp"))
-        comp = checkpoint(comp, 0)
+        comp = ckpt.cut(comp, 0)
         # frontier: vertices whose component changed last round (worklist)
         frontier = comp
 
@@ -110,7 +104,7 @@ def wcc(
                 F.least(F.col("comp"), F.coalesce(F.col("cand"), F.col("comp"))).alias("comp"),
             )
         )
-        merged = checkpoint(merged.select("id", "old_comp", "comp"), it)
+        merged = ckpt.cut(merged.select("id", "old_comp", "comp"), it)
         frontier = merged.filter(F.col("comp") < F.col("old_comp")).select("id", "comp")
         comp = merged.select("id", "comp")
         if frontier.isEmpty():
@@ -145,7 +139,7 @@ def wcc_large_small_star(
     valid at the fixpoint, so falling through silently would return wrong
     components.
     """
-    checkpoint = checkpointer or _default_checkpointer
+    ckpt = Checkpoints(checkpointer)
     # working edge set, symmetrized & deduped; self-loops are irrelevant
     edges = (
         graph.symmetrized()
@@ -153,7 +147,7 @@ def wcc_large_small_star(
         .filter(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
     )
-    edges = checkpoint(edges, 0)
+    edges = ckpt.cut(edges, 0)
     prev_fp = _edge_fingerprint(edges)
 
     for it in range(1, max_iterations + 1):
@@ -197,7 +191,7 @@ def wcc_large_small_star(
         new_edges = new_canon.select(
             F.col("a").alias("src"), F.col("b").alias("dst")
         ).unionByName(new_canon.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        new_edges = checkpoint(new_edges, it)
+        new_edges = ckpt.cut(new_edges, it)
 
         # convergence: order-independent fingerprint of the edge set (one
         # cheap aggregate instead of two exceptAll anti-joins per round —

@@ -24,6 +24,9 @@ Only directories containing the format's commit marker (parquet:
 ``_SUCCESS``; iceberg: its atomic ``metadata`` dir) count as committed
 iterations, so a crash mid-write is invisible to resume (the incomplete
 iteration is overwritten and redone).
+
+``Checkpoints`` is the one policy the kernels share for cutting iteration
+state and finding the iteration to resume from.
 """
 
 from __future__ import annotations
@@ -107,19 +110,8 @@ class CheckpointStore:
 
     def latest_iteration(self) -> int | None:
         """Highest committed (has _SUCCESS) iteration, or None."""
-        jvm, fs = self._hadoop_fs()
-        run_path = jvm.org.apache.hadoop.fs.Path(self._run_dir())
-        if not fs.exists(run_path):
-            return None
-        best = None
-        for status in fs.listStatus(run_path):
-            name = status.getPath().getName()
-            if name.startswith("iter_") and fs.exists(
-                jvm.org.apache.hadoop.fs.Path(status.getPath(), self._marker)
-            ):
-                k = int(name.split("_")[1])
-                best = k if best is None else max(best, k)
-        return best
+        its = self.committed_iterations()
+        return its[-1] if its else None
 
     def load(self, iteration: int) -> DataFrame:
         return self.spark.read.format(self.fmt).load(self._iter_dir(iteration))
@@ -184,3 +176,44 @@ class CheckpointStore:
                 (F.col("algo") == self.algo) & (F.col("run_id") == self.run_id)
             )
         )
+
+
+class Checkpoints:
+    """The one rule every kernel uses to cut an iteration's state.
+
+    - ``store`` wins over ``checkpointer``: with a store every cut is a
+      durable commit and the run can resume.
+    - Else the caller's ``checkpointer`` makes every cut.
+    - Else (the default path) a cut is a local checkpoint. The call site
+      picks ``eager``: a lazy cut costs no job of its own when the
+      round's next action (a count or stats aggregate) materializes it.
+    """
+
+    def __init__(self, checkpointer=None, store: CheckpointStore | None = None):
+        self.checkpointer = checkpointer
+        self.store = store
+
+    def cut(self, df: DataFrame, iteration: int, eager: bool = True) -> DataFrame:
+        if self.store is not None:
+            return self.store.checkpointer(df, iteration)
+        if self.checkpointer is not None:
+            return self.checkpointer(df, iteration)
+        return df.localCheckpoint(eager=eager)
+
+    def truncate(self, df: DataFrame, iteration: int) -> DataFrame:
+        """Cut a plan that is not a resume point: never a durable commit,
+        so a store run keeps it in memory."""
+        if self.store is None and self.checkpointer is not None:
+            return self.checkpointer(df, iteration)
+        return df.localCheckpoint(eager=True)
+
+    def resume(self, budget: int | None = None) -> int | None:
+        """Last committed iteration, clamped to ``budget`` (a store holding
+        more rounds must not answer for fewer); None without a store or
+        before the first commit."""
+        if self.store is None:
+            return None
+        k = self.store.latest_iteration()
+        if k is None or budget is None:
+            return k
+        return min(k, budget)

@@ -44,6 +44,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from linkgraph.runner import Checkpoints
+
 
 def _cosine_to_query_udf(q: np.ndarray):
     """Arrow-batched scorer against one broadcast query vector: one
@@ -632,7 +634,8 @@ def semantic_dedup(
     Same caveat: pass identical parameters on relaunch."""
     from linkgraph.docs import _components_over_pairs
 
-    latest = store.latest_iteration() if store is not None else None
+    ckpt = Checkpoints(store=store)
+    latest = ckpt.resume()
     # the fused path never materializes a standalone assignment table
     fused = store is None and method == "matmul" and pair_method == "matmul"
 
@@ -647,11 +650,7 @@ def semantic_dedup(
             id_col=id_col,
             vec_col=vec_col,
         )
-        assign = (
-            store.checkpointer(assign, _SEMDEDUP_ASSIGN_IT)
-            if store is not None
-            else assign.localCheckpoint(eager=True)
-        )
+        assign = ckpt.cut(assign, _SEMDEDUP_ASSIGN_IT)
 
     if latest is not None and latest >= _SEMDEDUP_PAIRS_IT:
         pairs = store.load(_SEMDEDUP_PAIRS_IT)
@@ -727,11 +726,7 @@ def semantic_dedup(
             raise ValueError(
                 f"unknown pair_method {pair_method!r} (want 'sql' or 'matmul')"
             )
-        pairs = (
-            store.checkpointer(pairs, _SEMDEDUP_PAIRS_IT)
-            if store is not None
-            else pairs.localCheckpoint(eager=True)
-        )
+        pairs = ckpt.cut(pairs, _SEMDEDUP_PAIRS_IT)
 
     comp = _components_over_pairs(pairs, store=store)
     return (

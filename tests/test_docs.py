@@ -1485,6 +1485,20 @@ def test_containment_direction_and_symmetric_case(spark):
     assert (r["doc_a"], r["doc_b"], r["c_ab"], r["c_ba"]) == (0, 1, 1.0, 1.0)
 
 
+def test_language_id(spark):
+    from linkgraph.docs import language_id
+
+    rows = [
+        (0, "the cat and the dog went to the park and it was fun", "en"),
+        (1, "der hund und die katze sind nicht in der stadt und das ist gut", "de"),
+        (2, "le chat et le chien sont dans la maison pour la nuit", "fr"),
+        (3, "el perro y el gato en la casa es un buen amigo por la noche", "es"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    got = {r["doc_id"]: r["lang_guess"] for r in language_id(df).collect()}
+    assert got == {0: "en", 1: "de", 2: "fr", 3: "es"}
+
+
 def test_language_id_markers_and_ties(spark):
     """Marker argmax picks the right language; zero-hit and tied docs fall
     back to declaration order (en first); score = hits/tokens."""

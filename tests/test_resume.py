@@ -9,7 +9,15 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from linkgraph.operators import pagerank, wcc
+from linkgraph.operators import (
+    bfs,
+    label_propagation,
+    louvain_move,
+    minimum_spanning_forest,
+    pagerank,
+    sssp,
+    wcc,
+)
 from linkgraph.runner import CheckpointStore
 
 from tests.conftest import bridge_edges, make_graph, zipf_edges
@@ -70,10 +78,47 @@ def test_partial_write_is_invisible(spark, tmp_path):
     with open(os.path.join(fake, "part-00000.parquet"), "wb") as f:
         f.write(b"garbage")
     assert store.latest_iteration() == 3  # uncommitted iteration ignored
+    assert store.committed_iterations() == [0, 1, 2, 3]
     got = pagerank(g, iterations=6, store=store)  # resumes at 3, overwrites 4
     want = pagerank(g, iterations=6, unroll=1)
     # cross-checkpointer-path comparison: same math, float order may differ
     assert np.allclose(_arr(got, "rank", n), _arr(want, "rank", n), atol=1e-12)
+    g.unpersist()
+
+
+_STORE_KERNELS = {
+    "pagerank": lambda g, **kw: pagerank(g, iterations=3, **kw),
+    "wcc": lambda g, **kw: wcc(g, **kw),
+    "label_propagation": lambda g, **kw: label_propagation(g, iterations=3, **kw),
+    "louvain_move": lambda g, **kw: louvain_move(g, rounds=3, **kw),
+    "bfs": lambda g, **kw: bfs(g, 0, **kw),
+    "sssp": lambda g, **kw: sssp(g, 0, **kw),
+    "minimum_spanning_forest": lambda g, **kw: minimum_spanning_forest(g, **kw),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_STORE_KERNELS))
+def test_store_wins_over_checkpointer(spark, tmp_path, name):
+    """Given both, every kernel commits its rounds to the store and never
+    calls the checkpointer; the answer equals the in-memory run."""
+    edges, n = bridge_edges()
+    g = make_graph(spark, edges, n)
+    run = _STORE_KERNELS[name]
+    calls = []
+
+    def checkpointer(df, it):
+        calls.append(it)
+        return df.localCheckpoint(eager=True)
+
+    store = CheckpointStore(spark, str(tmp_path / "both"), name, "r")
+    got = sorted(run(g, checkpointer=checkpointer, store=store).collect())
+    want = sorted(run(g).collect())
+    its = store.committed_iterations()
+    assert its == list(range(len(its))) and len(its) >= 2, its
+    assert calls == []
+    assert len(got) == len(want)
+    for a, b in zip(got, want):
+        assert a == pytest.approx(b, abs=1e-12)
     g.unpersist()
 
 
@@ -110,8 +155,6 @@ def test_wcc_resume_identical(spark, tmp_path):
 
 
 def test_bfs_sssp_labelprop_resume(spark, tmp_path):
-    from linkgraph.operators import bfs, label_propagation, sssp
-
     edges, n = zipf_edges(n=300, m=900)
     g = make_graph(spark, edges, n)
     root = int(edges[0, 0])
@@ -143,8 +186,6 @@ def test_bfs_sssp_labelprop_resume(spark, tmp_path):
 
 
 def test_metrics_scoped_and_empty(spark, tmp_path):
-    from linkgraph.operators import pagerank
-
     edges, n = bridge_edges()
     g = make_graph(spark, edges, n)
     root = str(tmp_path / "shared")
@@ -255,8 +296,6 @@ def test_bfs_resume_old_store_layout(spark, tmp_path):
     must still resume: the loaded visited set is normalized once, and a
     store that then accumulates NEW-layout levels on top (mixed schemas
     in one run dir) reads back via mergeSchema (ADVICE r03, medium)."""
-    from linkgraph.operators import bfs
-
     edges, n = zipf_edges(n=300, m=900)
     g = make_graph(spark, edges, n)
     root = int(edges[0, 0])

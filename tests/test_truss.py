@@ -37,6 +37,9 @@ def test_ktruss_clique_plus_tail(spark):
     g = make_graph(spark, edges, 8)
     got = {(r["a"], r["b"]): r["support"] for r in k_truss(g, k=4).collect()}
     assert got == {e: 3 for e in cliq}
+    # a caller's checkpointer must cut the peeled state, not the old one
+    eager = k_truss(g, k=4, checkpointer=lambda df, it: df.localCheckpoint(eager=True))
+    assert {(r["a"], r["b"]): r["support"] for r in eager.collect()} == got
     g.unpersist()
 
 
